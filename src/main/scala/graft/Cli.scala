@@ -137,6 +137,7 @@ object Cli {
     // output dir remains the engine's distributed-state store either way.
     if (graft.sinks.SqliteCli.binary.isDefined)
       graft.sinks.SqliteCli.writeDb(result.dbName, result)
+    result.release()
     result.messages.foreach(println)
     spark.stop()
   }

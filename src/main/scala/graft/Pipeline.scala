@@ -54,13 +54,36 @@ object Pipeline {
       justStrings: Boolean = false,
       outputDir: Option[String] = None)
 
+  /** What a run built. `tables` are the final fact and lookup tables,
+    * cached: the run materialized each one once (its parquet write read
+    * the cache), and they stay cached for the sink until [[release]].
+    * Each arrives in key order partition by partition — a fact table by
+    * `rowid`, a lookup table by `id` — which the `.db` sink relies on.
+    */
   case class Result(
       dbName: String,
       tables: Map[String, DataFrame],       // fact + lookup tables (final content)
       createdTables: Seq[String],
       ddl: Seq[String],                     // schema.sql statements in order
       messages: Seq[String],
-      lookupTables: Set[String] = Set.empty) // dictionary (id, value) tables
+      lookupTables: Set[String] = Set.empty) { // dictionary (id, value) tables
+
+    /** Drop the tables' caches; the frames stay valid and recompute
+      * lazily from the source CSVs. (A `--skip-errors` table then
+      * re-applies its bad-line filter per query, and Spark rejects a
+      * raw CSV query that reads no data column, such as a bare
+      * `count()` on a table with no extracted column.)
+      *
+      * Exception: a dictionary extended from an EXISTING lookup table
+      * stays cached, because its lineage reads the pre-run parquet that
+      * the run's staged swap replaced — the cached copy is the
+      * authoritative content (bounded by distinct-value cardinality,
+      * small by construction).
+      */
+    def release(): Unit = tables.foreach { case (name, df) =>
+      if (!lookupTables.contains(name) || createdTables.contains(name)) df.unpersist()
+    }
+  }
 
   def run(spark: SparkSession, config: Config): Result = {
     val dbName = SqliteDdl.normalizeDbName(config.dbName)
@@ -78,12 +101,24 @@ object Pipeline {
       separator = config.separator, skipErrors = config.skipErrors,
       quoting = config.quoting, justStrings = config.justStrings)
     var lastOverrides: Map[String, Shape.SqliteType] = Map.empty
+    // One cache per parsed file: the rowid count fills it, and every
+    // later consumer (dictionary sources, encode, the final table)
+    // reads it instead of parsing the CSV again. Disk-backed: spills
+    // instead of re-parsing, the Spark-idiomatic equivalent of the
+    // reference's in-RAM frames. Released at the end of the run.
+    val scans = mutable.ArrayBuffer.empty[DataFrame]
+    // rows loaded so far per table: file k of a multi-file table
+    // numbers its rowids after the files before it
+    val rowsSoFar = mutable.Map.empty[String, Long].withDefaultValue(0L)
     val loaded = discovered.flatMap { case (derivedName, path) =>
       try {
         val name = config.tableName.getOrElse(derivedName)
-        var df =
-          if (CsvLoader.isUrl(path)) CsvLoader.loadUrl(spark, path, csvOpts)
-          else CsvLoader.load(spark, path, csvOpts)
+        val local = if (CsvLoader.isUrl(path)) CsvLoader.fetch(path) else path
+        val scan = CsvLoader.parse(spark, local, csvOpts)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        scans += scan
+        val (numbered, rows) = Rowid.attachCounted(scan, start = rowsSoFar(name))
+        var df = numbered
         // P3 filename column — the value is the per-file DERIVED name,
         // never the -t override: the reference sets df.table_name =
         // table or name but df[filename_column] = name (cli.py:201-203),
@@ -115,11 +150,7 @@ object Pipeline {
           if (df.columns.contains(c))
             df = df.withColumn(c, DateParse.parseDatetime(col(c), config.datetimeFormats))
         }
-        // Each loaded table feeds several consumers (dictionary sources,
-        // encode, write) — persist so the CSV is parsed once, not once
-        // per consumer. Disk-backed: spills instead of re-parsing, the
-        // Spark-idiomatic equivalent of the reference's in-RAM frames.
-        df = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        rowsSoFar(name) += rows
         Some(name -> df)
       } catch {
         case e: Exception =>
@@ -168,16 +199,17 @@ object Pipeline {
     }
 
     // merge multi-file same-table loads (e.g. -t: all files -> one
-    // table); rowid is re-derived over the union so it stays the global
-    // insert order, like SQLite rowids across sequential inserts
+    // table); each file already numbered its rowids after the files
+    // before it, so the union keeps the global insert order, like
+    // SQLite rowids across sequential inserts
     val facts = mutable.LinkedHashMap.empty[String, DataFrame]
     encoded.foreach { case (name, df) =>
-      facts(name) = facts.get(name) match {
-        case Some(prev) =>
-          Rowid.attach(prev.unionByName(df, allowMissingColumns = true).drop(Rowid.ColName))
-        case None => df
-      }
+      facts(name) = facts.get(name).fold(df)(_.unionByName(df, allowMissingColumns = true))
     }
+    // each final table is built once: its parquet write fills the
+    // cache, and FTS and the sink read it
+    facts.mapValuesInPlace((_, df) =>
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
     // -- materialize (cli.py:245-265): DDL + parquet writes
     val createdTables = mutable.ArrayBuffer.empty[String]
@@ -266,19 +298,11 @@ object Pipeline {
       Files.writeString(Paths.get(out, "schema.sql"), ddl.mkString("\n"))
     }
 
-    // -- release caches: every pipeline consumer (dictionary build,
-    // encode, table writes, FTS) has executed, so a many-file run no
-    // longer accumulates cached CSV parses. Returned DataFrames stay
-    // valid — they lazily recompute from the (stable) source CSVs.
-    // Exception: a dictionary extended from an EXISTING lookup table
-    // stays cached, because its lineage reads the pre-run parquet that
-    // the staged swap has since replaced — the persisted copy is the
-    // authoritative content (bounded by distinct-value cardinality,
-    // small by construction).
-    loaded.foreach { case (_, df) => df.unpersist() }
-    dictionaries.foreach { case (table, dict) =>
-      if (!dictWasExisting.getOrElse(table, false)) dict.unpersist()
-    }
+    // -- release the per-file parse caches: every table built from them
+    // is materialized in its own cache, which stays valid without them
+    // (Result.release drops those). A frame whose cache was never filled
+    // (no output dir) falls back to recomputing from the CSVs.
+    scans.foreach(_.unpersist())
 
     Result(dbName, (facts ++ dictionaries).toMap, createdTables.toSeq, ddl.toSeq, messages.toSeq,
       dictionaries.keySet.toSet)

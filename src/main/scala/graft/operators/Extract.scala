@@ -101,9 +101,14 @@ object Extract {
       StructType(Seq(
         StructField("id", LongType, nullable = false),
         StructField(valueColName, StringType))))
+    // Ids ascend partition by partition (the `.db` sink streams in that
+    // order). A parquet read does not keep file order, so the existing
+    // ids are sorted into one partition ahead of the fresh ones.
     existing match {
-      case Some(e) => e.select(col("id").cast(LongType), col(valueColName)).unionAll(freshIds)
-      case None    => freshIds
+      case Some(e) =>
+        e.select(col("id").cast(LongType), col(valueColName))
+          .coalesce(1).sortWithinPartitions("id").unionAll(freshIds)
+      case None => freshIds
     }
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Stable 1-based row identity (SURVEY §2.7).
   *
@@ -10,26 +10,29 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (`utils.py:359`), and the reference's tests and FTS populate rely on
   * it (`tests/test_csvs_to_sqlite.py:104`).
   *
-  * Implementation: pure-DataFrame two-pass.
+  * Implementation: one counting job, then a projection.
   * `monotonically_increasing_id()` packs (partitionId << 33 | counter)
   * with the counter incrementing in row order WITHIN a partition — so a
-  * cheap first pass collecting per-partition row counts gives global
-  * offsets, and `rowid = offset(pid) + counter + 1` is computed entirely
-  * inside whole-stage codegen. No RDD boundary (an earlier zipWithIndex
-  * version deserialized every row to a boxed Row and back — measurably
-  * slower and an optimizer fence).
+  * column-pruned pass counting the rows of each partition gives global
+  * offsets, and `rowid = offsets(pid) + counter + 1` is computed entirely
+  * inside whole-stage codegen, with the offsets inlined as a literal
+  * array indexed by `spark_partition_id()` (no join, no broadcast). No
+  * RDD boundary in the returned plan (an earlier zipWithIndex version
+  * deserialized every row to a boxed Row and back — measurably slower
+  * and an optimizer fence).
   *
-  * Determinism: file-split order is stable for a given input, so both
-  * passes see identical partitioning. Scale: pass 1 is a column-pruned
-  * count per partition (driver holds one Long per partition).
+  * Determinism: file-split order is stable for a given input, so the
+  * counting job and every later job see identical partitioning. Scale:
+  * the counting job returns one Long per partition to the driver.
   */
 object Rowid {
 
   val ColName = "rowid"
 
-  /** The two-pass scheme requires that both passes observe the SAME
-    * row→partition assignment — true for file scans and narrow chains
-    * over them, NOT true above operators that re-distribute rows:
+  /** The count-then-number scheme requires that the counting job and
+    * the jobs that read the rowid observe the SAME row→partition
+    * assignment — true for file scans and narrow chains over them, NOT
+    * true above operators that re-distribute rows:
     * round-robin `repartition` (order within a partition is not a
     * function of the input), range sort (partition boundaries are
     * re-sampled per job), aggregates/windows/distinct (shuffle). Fail
@@ -49,7 +52,16 @@ object Rowid {
     }
   }
 
-  def attach(df: DataFrame, colName: String = ColName): DataFrame = {
+  def attach(df: DataFrame, colName: String = ColName): DataFrame =
+    attachCounted(df, colName)._1
+
+  /** [[attach]] numbering from `start + 1`, returning the frame and its
+    * row count. The count comes from the counting job itself, so a table
+    * merged from several files numbers file k from the rows of the files
+    * before it, and the files merge with a plain union.
+    */
+  def attachCounted(
+      df: DataFrame, colName: String = ColName, start: Long = 0L): (DataFrame, Long) = {
     require(!df.columns.contains(colName),
       s"Rowid.attach: column '$colName' already exists in the input schema")
     unstableOrderOp(df).foreach { op =>
@@ -59,29 +71,15 @@ object Rowid {
         s"the offset pass and the id pass. Attach rowid at scan time (before " +
         s"any shuffle), persist the upstream first, or use Rowid.attachZip.")
     }
-    val counts = df
-      .select(spark_partition_id().as("pid"))
-      .groupBy("pid").count()
+    // rows per partition, in partition order (empty partitions count 0)
+    val counts = df.select().queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(rows.size.toLong))
       .collect()
-      .map(r => r.getInt(0) -> r.getLong(1))
-      .sortBy(_._1)
-    val offsets = counts.scanLeft(0L)(_ + _._2).init
-    val offsetByPid: Map[Int, Long] = counts.map(_._1).zip(offsets).toMap
-
-    val spark = df.sparkSession
-    val offsetsDf = broadcast(spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        offsetByPid.toSeq.map { case (p, o) => Row(p, o) }, 1),
-      StructType(Seq(
-        StructField("__pid", org.apache.spark.sql.types.IntegerType, nullable = false),
-        StructField("__offset", LongType, nullable = false)))))
-
+    val offsets = counts.scanLeft(start)(_ + _)
     val counterMask = (1L << 33) - 1L
-    df.withColumn("__pid", spark_partition_id())
-      .withColumn("__mid", monotonically_increasing_id())
-      .join(offsetsDf, Seq("__pid"))
-      .withColumn(colName, col("__offset") + col("__mid").bitwiseAND(lit(counterMask)) + 1L)
-      .drop("__pid", "__mid", "__offset")
+    val rowid = element_at(typedLit(offsets.init), spark_partition_id() + 1) +
+      monotonically_increasing_id().bitwiseAND(lit(counterMask)) + 1L
+    (df.withColumn(colName, rowid), offsets.last - start)
   }
 
   /** Rowid via `zipWithIndex` over the DataFrame's execution RDD — the

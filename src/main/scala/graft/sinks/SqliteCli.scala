@@ -3,6 +3,8 @@ package graft.sinks
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.LongType
 
 import graft.Pipeline
 
@@ -33,36 +35,56 @@ object SqliteCli {
   }
 
   /** SQL literal for a Spark row value. Strings escape embedded quotes;
-    * NULL stays NULL; numeric types print their JVM form (SQLite parses
-    * "41.0" and "41" identically to the reference's pandas `to_sql`).
+    * NULL stays NULL; dates are quoted ISO text (`'2000-12-23'`), which
+    * SQLite stores as TEXT like the reference; numeric types print their
+    * JVM form (SQLite parses "41.0" and "41" identically to the
+    * reference's pandas `to_sql`).
     */
   private[sinks] def sqlLiteral(v: Any): String = v match {
-    case null               => "NULL"
-    case s: String          => "'" + s.replace("'", "''") + "'"
-    case b: Array[Byte]     => "X'" + b.map("%02x".format(_)).mkString + "'"
-    case other              => other.toString
+    case null                    => "NULL"
+    case s: String               => "'" + s.replace("'", "''") + "'"
+    case b: Array[Byte]          => "X'" + b.map("%02x".format(_)).mkString + "'"
+    case d: java.sql.Date        => "'" + d.toLocalDate + "'"
+    case d: java.time.LocalDate  => "'" + d + "'"
+    case other                   => other.toString
   }
 
   /** INSERT statements for one table, in stable row order: explicit
     * `rowid` column drives the order then drops (the reference writes
     * `index=False`, so SQLite's implicit rowid = insertion order — our
     * 1-based rowid reproduces it); lookup tables order by `id`.
+    *
+    * The frame must already hold its keys in order partition by
+    * partition, as [[Pipeline.Result]] tables do: rowid ranges are
+    * assigned per partition and per file, lookup ids come from
+    * `zipWithIndex`, and broadcast joins keep the stream side's order.
+    * So a sort within each partition restores row order without a
+    * shuffle, toLocalIterator streams the partitions in order at
+    * O(one partition) driver memory, and a key that fails to increase
+    * is an error rather than a silently reordered table.
     */
   private def insertsFor(table: String, df: DataFrame): Iterator[String] = {
-    val hasRowid = df.columns.contains("rowid")
-    val ordered =
-      if (hasRowid) df.orderBy("rowid").drop("rowid")
-      else if (df.columns.contains("id")) df.orderBy("id")
-      else df
-    val cols = ordered.columns.map(c => s""""$c"""").mkString(", ")
-    // Sorted frame ⇒ partition order = row order, so toLocalIterator
-    // streams rows in rowid order at O(one partition) driver memory —
-    // byte-identical output to a full collect, without materializing
-    // the table on the driver (matters when a fact table is huge).
     import scala.jdk.CollectionConverters._
-    ordered.toLocalIterator().asScala.map { row =>
-      val vals = row.toSeq.map(sqlLiteral).mkString(", ")
-      s"""INSERT INTO [$table] ($cols) VALUES ($vals);"""
+    val key = Seq("rowid", "id").find(df.columns.contains)
+    val cols = df.columns.filterNot(_ == "rowid")
+    val colList = cols.map(c => s""""$c"""").mkString(", ")
+    def insert(vals: Iterator[Any]): String =
+      s"""INSERT INTO [$table] ($colList) VALUES (${vals.map(sqlLiteral).mkString(", ")});"""
+    key match {
+      case None => df.toLocalIterator().asScala.map(row => insert(row.toSeq.iterator))
+      case Some(k) =>
+        val ordered = df.sortWithinPartitions(k)
+          .select((col(k).cast(LongType) +: cols.toSeq.map(col)): _*)
+        var last = Long.MinValue
+        ordered.toLocalIterator().asScala.map { row =>
+          val at = row.getLong(0)
+          if (at <= last)
+            throw new IllegalStateException(
+              s"table $table: $k $at follows $last; the frame must hold its $k " +
+                "values in ascending order partition by partition")
+          last = at
+          insert(row.toSeq.iterator.drop(1))
+        }
     }
   }
 
@@ -154,18 +176,48 @@ object SqliteCli {
   private def runScriptStreamed(bin: String, dbPath: String)(
       body: java.io.Writer => Unit): String = {
     val tmp = Files.createTempFile("graft-sqlite-", ".sql")
+    // stderr goes to a file, not a pipe: reading stdout to its end while
+    // sqlite3 blocks on a full stderr pipe would hang both processes
+    val err = Files.createTempFile("graft-sqlite-", ".err")
     try {
       val w = Files.newBufferedWriter(tmp)
       try body(w) finally w.close()
       val pb = new ProcessBuilder(bin, "-batch", dbPath)
       pb.redirectInput(tmp.toFile)
+      pb.redirectError(err.toFile)
       val proc = pb.start()
       val outS = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-      val errS = new String(proc.getErrorStream.readAllBytes(), "UTF-8")
       val rc = proc.waitFor()
-      if (rc != 0 || errS.nonEmpty)
-        throw new IllegalStateException(s"sqlite3 failed (rc=$rc): $errS")
+      val (head, total) = headAndCount(err)
+      if (rc != 0 || total > 0) {
+        val more = if (total > head.size) s"\n... ${total - head.size} more error lines" else ""
+        throw new IllegalStateException(s"sqlite3 failed (rc=$rc): ${head.mkString("\n")}$more")
+      }
       outS
-    } finally Files.deleteIfExists(tmp)
+    } finally {
+      Files.deleteIfExists(tmp)
+      Files.deleteIfExists(err)
+    }
+  }
+
+  /** stderr lines of a failed sqlite3 run kept in the exception. */
+  private val MaxErrorLines = 20
+
+  /** The first [[MaxErrorLines]] lines of a text file, and its line count. */
+  private def headAndCount(p: java.nio.file.Path): (Seq[String], Int) = {
+    // a lenient decoder: sqlite3 echoes the failing statement's bytes
+    val r = new java.io.BufferedReader(
+      new java.io.InputStreamReader(Files.newInputStream(p), "UTF-8"))
+    try {
+      val head = Seq.newBuilder[String]
+      var n = 0
+      var line = r.readLine()
+      while (line != null) {
+        if (n < MaxErrorLines) head += line
+        n += 1
+        line = r.readLine()
+      }
+      (head.result(), n)
+    } finally r.close()
   }
 }

@@ -43,8 +43,7 @@ object CsvLoader {
       skipErrors: Boolean = false,
       quoting: QuoteMode = QuoteMode.Minimal,
       justStrings: Boolean = false,
-      encodingsToTry: Seq[String] = Seq("utf-8", "latin-1"),
-      attachRowid: Boolean = true)
+      encodingsToTry: Seq[String] = Seq("utf-8", "latin-1"))
 
   /** Python codec names -> JVM charset names ("latin-1" is not a JVM alias). */
   private def charsetName(encoding: String): String =
@@ -140,10 +139,29 @@ object CsvLoader {
     else None
   }
 
-  /** S1: load one CSV with the encoding fallback chain. */
+  /** S1: load one CSV with the encoding fallback chain, then attach
+    * its [[Rowid]]. A `--skip-errors` parse is cached first: Spark
+    * refuses raw-file queries whose pruned schema is ONLY the corrupt
+    * column (the rowid count, or a bare count() after the filter), and
+    * the documented remedy is caching the parsed rows — the semantic
+    * twin of pandas' in-RAM load. [[graft.Pipeline]] calls [[parse]]
+    * and owns one cache per file instead.
+    */
   def load(spark: SparkSession, path: String, opts: CsvOptions = CsvOptions()): DataFrame = {
+    val scan = parse(spark, path, opts)
+    val rows =
+      if (opts.skipErrors) scan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else scan
+    Rowid.attach(rows)
+  }
+
+  /** The parsed rows of one CSV, without a rowid and uncached: the
+    * encoding fallback chain, quoting and `--skip-errors` filtering of
+    * [[load]].
+    */
+  def parse(spark: SparkSession, path: String, opts: CsvOptions = CsvOptions()): DataFrame = {
     spoolIfOpaqueCodec(path) match {
-      case Some(tmp) => return load(spark, tmp, opts)
+      case Some(tmp) => return parse(spark, tmp, opts)
       case None =>
     }
     def attempt(encoding: String): DataFrame = {
@@ -171,10 +189,6 @@ object CsvLoader {
         // regardless of downstream pruning) and filter it.
         val inferred = baseReader.csv(path).schema
         val withCorrupt = inferred.add("__corrupt", org.apache.spark.sql.types.StringType)
-        // Persisted: Spark refuses raw-file queries whose pruned schema
-        // is ONLY the corrupt column (e.g. a bare count() after the
-        // filter) — the documented remedy is caching the parsed rows,
-        // which is also the semantic twin of pandas' in-RAM load.
         baseReader
           .schema(withCorrupt)
           .option("mode", "PERMISSIVE")
@@ -182,7 +196,6 @@ object CsvLoader {
           .csv(path)
           .filter(org.apache.spark.sql.functions.col("__corrupt").isNull)
           .drop("__corrupt")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       } else {
         val df = baseReader.option("mode", "FAILFAST").csv(path)
         df.schema // force header/inference so a bad encoding fails here
@@ -193,10 +206,8 @@ object CsvLoader {
     var last: Throwable = null
     while (it.hasNext) {
       val enc = it.next()
-      try {
-        val df = applyQuoteNonNumeric(attempt(enc), opts)
-        return if (opts.attachRowid) Rowid.attach(df) else df
-      } catch { case e: Throwable => last = e }
+      try return applyQuoteNonNumeric(attempt(enc), opts)
+      catch { case e: Throwable => last = e }
     }
     throw new IllegalArgumentException(
       s"$path could not be loaded with encodings ${opts.encodingsToTry.mkString(", ")}", last)
@@ -280,11 +291,15 @@ object CsvLoader {
   def isUrl(s: String): Boolean =
     Seq("http://", "https://", "ftp://").exists(p => s.toLowerCase.startsWith(p))
 
-  def loadUrl(spark: SparkSession, url: String, opts: CsvOptions = CsvOptions()): DataFrame = {
+  def loadUrl(spark: SparkSession, url: String, opts: CsvOptions = CsvOptions()): DataFrame =
+    load(spark, fetch(url), opts)
+
+  /** Download `url` to a temp file and return its path. */
+  def fetch(url: String): String = {
     val tmp = Files.createTempFile("graft-url-", ".csv")
     val in = new java.net.URL(url).openStream()
     try Files.copy(in, tmp, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     finally in.close()
-    load(spark, tmp.toString, opts)
+    tmp.toString
   }
 }

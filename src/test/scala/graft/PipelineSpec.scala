@@ -12,6 +12,7 @@ import graft.operators.Fts
   * dates, PK DDL, incremental append.
   */
 class PipelineSpec extends SparkSpec {
+  import spark.implicits._
 
   def outDir(): String = Files.createTempDirectory("graft-out").toString
 
@@ -309,5 +310,78 @@ class PipelineSpec extends SparkSpec {
     assert(rows.length === 4)
     assert(rows.map(_.getAs[Long]("rowid")).toSeq === Seq(1L, 2L, 3L, 4L))
     assert(rows(3).getAs[String]("film") === "Seven")
+  }
+
+  test("three-file -t load numbers rowids 1..N in file order, files split into several partitions") {
+    val a = tempCsv("a.csv", Fixtures.CSV_MULTI)
+    val b = tempCsv("b.csv", "film,actor_1,actor_2\nSeven,Brad Pitt,Kevin Spacey\n")
+    val c = tempCsv("c.csv",
+      "film,actor_1,actor_2\nFargo,Frances McDormand,William H. Macy\n" +
+        "Heat,Al Pacino,Robert De Niro\nAlien,Sigourney Weaver,Tom Skerritt\n")
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "48") // a few lines per partition
+    try {
+      val r = Pipeline.run(spark, cfg(Seq(a, b, c), "merged3.db").copy(tableName = Some("films")))
+      val films = r.tables("films")
+      assert(films.rdd.getNumPartitions > 3)
+      // the frame's own order, partition by partition, is the rowid order
+      val rows = films.collect()
+      assert(rows.map(_.getAs[Long]("rowid")).toSeq === (1L to 7L))
+      assert(rows.map(_.getAs[String]("film")).toSeq === Seq(
+        "The Rock", "National Treasure", "Troy", "Seven", "Fargo", "Heat", "Alien"))
+      r.release()
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("release() leaves no cached RDD behind for a --skip-errors run and a multi-file run") {
+    val sc = spark.sparkContext
+    def newCaches(before: Set[Int]) = sc.getPersistentRDDs.keySet.toSet -- before
+    val bad = tempCsv("bad.csv", "a,b\n1,x\n2,y,extra\n3,z\n")
+    val before1 = sc.getPersistentRDDs.keySet.toSet
+    val r1 = Pipeline.run(spark, cfg(Seq(bad), "skip.db").copy(
+      skipErrors = true, extractColumns = Seq("b"), outputDir = Some(outDir())))
+    assert(r1.tables("bad").orderBy("rowid").select("a").collect().map(_.getInt(0)).toSeq ===
+      Seq(1, 3))
+    r1.release()
+    assert(newCaches(before1).isEmpty)
+
+    val a = tempCsv("a.csv", Fixtures.CSV_MULTI)
+    val b = tempCsv("b.csv", "film,actor_1,actor_2\nSeven,Brad Pitt,Kevin Spacey\n")
+    val before2 = sc.getPersistentRDDs.keySet.toSet
+    val r2 = Pipeline.run(spark, cfg(Seq(a, b), "multi.db").copy(
+      tableName = Some("films"), extractColumns = Seq("actor_1:actors:name"),
+      ftsColumns = Seq("film"), outputDir = Some(outDir())))
+    r2.release()
+    assert(newCaches(before2).isEmpty)
+    // released frames recompute from the CSVs
+    assert(r2.tables("films").orderBy("rowid").select("film").collect().map(_.getString(0)).toSeq ===
+      Seq("The Rock", "National Treasure", "Troy", "Seven"))
+  }
+
+  test("a lookup table extended from a multi-file parquet state keeps ids ascending per partition") {
+    val out = outDir()
+    // pre-existing lookup state in two files; the larger (ids 3..30)
+    // comes first in a parquet scan, which orders splits by size
+    val names = (1 to 30).map(i => f"Actor $i%02d")
+    val existing = names.zipWithIndex.map { case (n, i) => (i + 1L, n) }.toDF("id", "name")
+    existing.filter(col("id") <= 2).coalesce(1).write.parquet(s"$out/actors.parquet")
+    existing.filter(col("id") > 2).coalesce(1).write.mode("append").parquet(s"$out/actors.parquet")
+    assert(new java.io.File(s"$out/actors.parquet").list().count(_.endsWith(".parquet")) === 2)
+    val csv = tempCsv("films.csv", "film,actor_1\nSeven,Brad Pitt\nTroy,Actor 01\n")
+    val r = Pipeline.run(spark, cfg(Seq(csv), "ext.db").copy(
+      extractColumns = Seq("actor_1:actors:name"), outputDir = Some(out)))
+    val ids = r.tables("actors").collect().map(_.getLong(0)).toSeq
+    assert(ids === (1L to 31L))
+    r.release()
+  }
+
+  test("a malformed CSV without --skip-errors fails only its own file (cli.py per-file LoadCsvError)") {
+    val bad = tempCsv("bad.csv", "a,b\n1,x\n2,y,EXTRA,COLS\n3,z\n")
+    val good = tempCsv("good.csv", "a,b\n1,x\n")
+    val r = Pipeline.run(spark, cfg(Seq(bad, good), "failfast.db").copy(outputDir = Some(outDir())))
+    assert(r.tables.keySet === Set("good"))
+    assert(r.tables("good").select("b").collect().map(_.getString(0)).toSeq === Seq("x"))
+    r.release()
   }
 }

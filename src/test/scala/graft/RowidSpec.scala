@@ -47,4 +47,17 @@ class RowidSpec extends SparkSpec {
     assert(a === b, "two passes must agree")
     assert(a.values.toSeq.sorted === (1L to 100L))
   }
+
+  test("attach over several partitions, one of them empty, is a stable 1..n in scan order") {
+    // five range partitions of 20 ids; the filter empties the second
+    val scanned = spark.range(0, 100, 1, 5).toDF().filter(col("id") < 20 || col("id") >= 40)
+    assert(scanned.rdd.getNumPartitions === 5)
+    val (numbered, n) = Rowid.attachCounted(scanned, start = 10L)
+    assert(n === 80L)
+    def pass() = numbered.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    val a = pass()
+    assert(a === pass(), "two passes must agree")
+    val ids = (0L until 20L) ++ (40L until 100L)
+    assert(a === ids.zip(11L to 90L), "rowid follows scan order, numbered from start + 1")
+  }
 }

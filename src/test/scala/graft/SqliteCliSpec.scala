@@ -1217,4 +1217,47 @@ class SqliteCliSpec extends SparkSpec {
     assert(queries.count(_.exists(_ > 0x7F)) > 30,
       "generator degenerate: almost no non-ASCII queries")
   }
+
+  test("real .db: a DATE column is stored as its ISO text") {
+    assume(SqliteCli.binary.isDefined, "no sqlite3 binary on this box")
+    val csv = tempCsv("dates.csv", "id,d\n1,2000-12-23\n")
+    val r = Pipeline.run(spark, cfg(Seq(csv)))
+    assert(r.tables("dates").schema("d").dataType === org.apache.spark.sql.types.DateType)
+    val f = dbFile()
+    SqliteCli.writeDb(f, r)
+    assert(SqliteCli.query(f, "SELECT d, typeof(d) FROM [dates];") ===
+      Seq(Seq(Some("2000-12-23"), Some("text"))))
+  }
+
+  test("writeDb refuses a table whose key decreases from one partition to the next") {
+    assume(SqliteCli.binary.isDefined, "no sqlite3 binary on this box")
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    for (key <- Seq("rowid", "id")) {
+      val schema = new StructType().add(key, LongType, nullable = false).add("v", StringType)
+      // partition 0 holds key 2, partition 1 holds key 1
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(Row(2L, "b"), Row(1L, "a")), 2), schema)
+      val r = Pipeline.Result("t.db", Map("t" -> df), Seq("t"),
+        Seq("""CREATE TABLE "t" ("v" TEXT)"""), Nil)
+      val e = intercept[IllegalStateException] { SqliteCli.writeDb(dbFile(), r) }
+      assert(e.getMessage.contains(s"$key 1 follows 2"), e.getMessage)
+    }
+  }
+
+  test("sqlite3 errors past 64 KiB of stderr fail fast with a bounded message") {
+    assume(SqliteCli.binary.isDefined, "no sqlite3 binary on this box")
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // each bad statement makes sqlite3 print a three-line parse error
+    val script = Seq.fill(3000)("SELEC 1;").mkString("\n")
+    val run = Future(intercept[IllegalStateException](SqliteCli.query(dbFile(), script)))
+    val e = Await.result(run, 60.seconds)
+    val msg = e.getMessage
+    assert(msg.startsWith("sqlite3 failed (rc="), msg)
+    assert(msg.contains("syntax error"), msg)
+    assert(msg.linesIterator.size <= 22, msg)
+    assert(msg.linesIterator.toSeq.last.matches("""\.\.\. \d+ more error lines"""), msg)
+  }
 }
