@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -16,14 +14,7 @@ object Bench {
     // Numeric core count for the JSON stamp/merge key; a non-numeric
     // master spec (e.g. "*") records as -1 and never merges.
     val cpusNum: Double = try cpus.toDouble catch { case _: Throwable => -1.0 }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(s"local[$cpus]", cpus)
     // Silence WindowExec's "No Partition Defined" warning for this run:
     // every unpartitioned window a graded query executes is a BOUNDED
     // whitelisted one (dictionary-rank / tiny-offsets prefix sums,
@@ -146,7 +137,7 @@ object Bench {
     // oscillator set, which couldn't keep up: r17's board recorded
     // 12.0s for a 1.0s x_fts_bm25w because the FTS family wasn't in the
     // list). Root cause is measured (BASELINE.md "Oscillator root
-    // cause" / tools/OscProbe): C2 compilation of generated whole-stage
+    // cause", 12 in-process reps at sf0.1): C2 compilation of generated whole-stage
     // classes makes rep01 2-7x steady state, converging over ~10
     // executions — a property of WHICH query warms when, not of a fixed
     // name set. Detection is per-query, in-board: after the standard

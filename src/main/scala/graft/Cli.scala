@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.CsvLoader.QuoteMode
 
 /** CLI argument parsing mirroring the reference's interface
@@ -121,14 +119,8 @@ object Cli {
     if (args.contains("--version")) { println(VersionLine); return }
     if (args.contains("--help")) { println(HelpText); return }
     val config = parse(args.toIndexedSeq)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val result = Pipeline.run(spark, config.copy(
       outputDir = config.outputDir.orElse(Some(config.dbName.stripSuffix(".db") + ".out"))))
     // With a sqlite3 binary on the box, emit the reference's actual

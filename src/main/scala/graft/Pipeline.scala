@@ -6,6 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.DateParse
 import graft.operators.{Extract, Fts, Rowid, Shape}
@@ -16,16 +17,17 @@ import graft.sources.CsvLoader
   * (`cli.py:149-298`): discover -> load -> transform -> dictionary-encode
   * -> materialize (+DDL) -> FTS.
   *
-  * Sink: a directory of parquet tables plus `schema.sql` holding the
+  * State: a directory of parquet tables plus `schema.sql` holding the
   * exact SQLite DDL the reference would execute (CREATE TABLE with
-  * PK/FK, CREATE INDEX, CREATE VIRTUAL TABLE). The offline environment
-  * has no sqlite-jdbc jar (SURVEY §7.2.6); with one on the classpath the
-  * same DDL + DataFrames write to a real .db unchanged.
+  * PK/FK, CREATE INDEX, CREATE VIRTUAL TABLE). [[graft.sinks.SqliteCli]]
+  * turns a [[Result]] into the real `.db` (`graft.Cli` runs both).
   *
   * Incremental semantics (`cli.py:248-251`): if the output directory
   * already holds a table and `replaceTables` is false, fact tables
-  * append and lookup tables extend (existing ids are reused — E2's
-  * incremental contract).
+  * append. With `replaceTables`, the loaded fact tables drop and
+  * recreate. Either way lookup tables extend: existing ids are reused
+  * and only new values get new ids (E2's incremental contract,
+  * `utils.py:151-182`, `utils.py:204-235`).
   */
 object Pipeline {
 
@@ -86,6 +88,25 @@ object Pipeline {
   }
 
   def run(spark: SparkSession, config: Config): Result = {
+    val persisted = mutable.ArrayBuffer.empty[DataFrame]
+    try build(spark, config, persisted)
+    catch { case e: Throwable =>
+      // A failed run returns no frame, so no caller could ever drop
+      // these caches. Newest first: each table goes before the scans it
+      // was built from, so Spark never re-plans a dependent cache.
+      persisted.reverseIterator.foreach(_.unpersist(blocking = false))
+      throw e
+    }
+  }
+
+  /** [[run]]'s body; every frame it persists is added to `persisted`. */
+  private def build(
+      spark: SparkSession, config: Config,
+      persisted: mutable.ArrayBuffer[DataFrame]): Result = {
+    def cache(df: DataFrame): DataFrame = {
+      persisted += df.persist(StorageLevel.MEMORY_AND_DISK)
+      df
+    }
     val dbName = SqliteDdl.normalizeDbName(config.dbName)
     val ddl = mutable.ArrayBuffer.empty[String]
     val messages = mutable.ArrayBuffer.empty[String]
@@ -114,8 +135,7 @@ object Pipeline {
       try {
         val name = config.tableName.getOrElse(derivedName)
         val local = if (CsvLoader.isUrl(path)) CsvLoader.fetch(path) else path
-        val scan = CsvLoader.parse(spark, local, csvOpts)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val scan = cache(CsvLoader.parse(spark, local, csvOpts))
         scans += scan
         val (numbered, rows) = Rowid.attachCounted(scan, start = rowsSoFar(name))
         var df = numbered
@@ -164,8 +184,10 @@ object Pipeline {
     val existingDict: String => Option[DataFrame] = { table =>
       config.outputDir.flatMap { out =>
         val p = Paths.get(out, s"$table.parquet")
-        if (!config.replaceTables && Files.exists(p)) Some(spark.read.parquet(p.toString))
-        else None
+        // read even under replaceTables: that flag drops the loaded
+        // fact tables only, and a lookup table keeps its ids
+        // (cli.py:248-249)
+        if (Files.exists(p)) Some(spark.read.parquet(p.toString)) else None
       }
     }
     // iteration order: per column spec, then per dataframe (utils.py:241-253)
@@ -185,9 +207,8 @@ object Pipeline {
     sourcesByTable.foreach { case (table, sources) =>
       val existing = existingDict(table)
       dictWasExisting(table) = existing.isDefined
-      dictionaries(table) = Extract.buildDictionary(
-        sources.toSeq, dictValueCol(table), existing)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      dictionaries(table) = cache(Extract.buildDictionary(
+        sources.toSeq, dictValueCol(table), existing))
     }
     val encoded = loaded.map { case (name, df0) =>
       var df = df0
@@ -208,8 +229,7 @@ object Pipeline {
     }
     // each final table is built once: its parquet write fills the
     // cache, and FTS and the sink read it
-    facts.mapValuesInPlace((_, df) =>
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    facts.mapValuesInPlace((_, df) => cache(df))
 
     // -- materialize (cli.py:245-265): DDL + parquet writes
     val createdTables = mutable.ArrayBuffer.empty[String]

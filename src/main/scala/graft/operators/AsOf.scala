@@ -59,9 +59,10 @@ object AsOf {
     * already-partitioned side (bucketed table, prior aggregation)
     * shuffles zero times, and AQE coalesces both sides together.
     *
-    * When to prefer which (measured, AsofSkewProbe): on small BALANCED
-    * inputs the composed form's single exchange is slightly cheaper
-    * (two stages of fixed overhead vs one); on HOT KEYS the exec is
+    * When to prefer which (measured; SURVEY.md, as-of exec row): on
+    * small BALANCED inputs the composed form's single exchange is
+    * slightly cheaper (two stages of fixed overhead vs one); on HOT
+    * KEYS the exec is
     * ~1.6x faster (2M and 8M rows/side on one key) and — the part that
     * matters at 100 TB — O(1) memory per key, where the window form
     * buffers every row of the hot key in the WindowExec frame array

@@ -221,12 +221,16 @@ object TextDedup {
     * boundaries are preserved inside every group), within-group pairs
     * come from the same capped kernel, and the missing chain links
     * between the last slice head of one group and the head of the next
-    * come from an equi-self-join of the (tiny, one row per group)
-    * group-heads table on `__grp = __grp + 1` — `__grp` is contiguous
-    * per key by construction (rank div groupSize), so the join IS the
-    * lead(); no window of any kind, hence scale-safe and guard-quiet
-    * at every key cardinality. Slice-chain connectivity holds across
-    * group boundaries and dedup clustering is unaffected.
+    * come from a `lead()` over the group rows, on the keys partitioning
+    * the membership build already established. The window is
+    * group-grain (one row per `cap * slicesPerGroup` members), so its
+    * sort stays bounded. With `lowCardKeys`, where a keys-partitioned
+    * window is the shape PlanGuard flags, the links come instead from
+    * an equi-self-join of the group-heads table on
+    * `__grp = __grp + 1`: `__grp` is contiguous per key by construction
+    * (rank div groupSize), so that join IS the lead(). Slice-chain
+    * connectivity holds across group boundaries and dedup clustering
+    * is unaffected.
     */
   private[graft] def bucketedPairs(
       rows: DataFrame, keyCols: Seq[String], cap: Int,
@@ -380,12 +384,11 @@ object TextDedup {
   }
 
   /** The collapse's canonicalization: sorted array + the two 64-bit
-    * fingerprint lanes. ONE definition — the operator's decision
-    * aggregation and [[graft.tools.DedupChainProbe]]'s stage timing
-    * both call this, so the probe can never silently measure a
-    * different spelling (r18 ADVICE).
+    * fingerprint lanes. ONE definition, shared by the operator's
+    * decision aggregation and its collapsed path (r18 stage budget in
+    * OPTIMIZATION_r18.md).
     */
-  private[graft] def collapseCanon(sets: DataFrame): DataFrame =
+  private def collapseCanon(sets: DataFrame): DataFrame =
     sets.select(col("id"), array_sort(col("sset")).as("sset0"))
       .withColumn("__h1", xxhash64(col("sset0")))
       .withColumn("__h2", xxhash64(lit("lane2"), col("sset0")))
@@ -635,9 +638,12 @@ object TextDedup {
     * [[dedupClusters]]), output canonical (u > v, since v is a
     * component min), deduplicated within each partition by
     * construction. A node split across partitions emits one star edge
-    * per partition — the global rounds reconcile those. Deterministic
-    * given the input partitioning (min per component does not depend
-    * on edge order), so task retries reproduce byte-identical output.
+    * per partition — the global rounds reconcile those.
+    * Set-deterministic given the input partitioning: the min per
+    * component does not depend on edge order, so a task retry emits
+    * the same star-edge set, though not necessarily in the same row
+    * order (a shuffled partition's edges arrive in fetch order, and
+    * the emission follows hash-map iteration).
     */
   private[graft] def contractLocal(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession

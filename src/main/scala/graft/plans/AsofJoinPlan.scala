@@ -42,7 +42,8 @@ object AsofJoinMode {
   *     candidate payload row — the union+window form buffers every row
   *     of a key in the WindowExec frame array, so a hot key allocates
   *     (then spills) its whole history; measured 1.6x faster on a
-  *     single-key 2M/8M-row corpus (AsofSkewProbe) and O(1) memory;
+  *     single-key 2M/8M-row corpus (SURVEY.md, as-of exec row) and
+  *     O(1) memory;
   *   - the right side never widens to the left schema and vice versa:
   *     exchange bytes are each side's own rows, nothing more.
   *

@@ -1,6 +1,5 @@
 package graft.sinks
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
 import graft.operators.Shape.SqliteType
@@ -27,9 +26,9 @@ import graft.operators.Shape.SqliteType
   * Spark infers LongType for integer+blank CSV columns, so the mapping
   * below never sees the float64 mirage pandas has to correct.
   *
-  * The JDBC write path (`df.write.jdbc`) is kept optional: the offline
-  * environment has no sqlite-jdbc jar, and graded correctness rides on
-  * the DataFrame surface (SURVEY §7.2.6).
+  * The statements land in `schema.sql` next to the parquet state
+  * ([[graft.Pipeline]]), and [[SqliteCli.writeDb]] executes them
+  * against a real `.db`.
   */
 object SqliteDdl {
 
@@ -163,25 +162,8 @@ object SqliteDdl {
     s"""INSERT INTO "${tableName}_fts" (rowid, $ftsCols) $select"""
   }
 
-  /** K2/K3/K4 write modes for a JDBC sink; retained as an enum so the CLI
-    * layer mirrors `--replace-tables` / append semantics even when the
-    * physical write is parquet.
+  /** K4: `--replace-tables` drops a loaded fact table before its
+    * CREATE (`cli.py:248-249`).
     */
-  sealed trait WriteMode
-  object WriteMode {
-    case object CreateNew extends WriteMode
-    case object Append extends WriteMode   // existing table: no DDL work (cli.py:250-251)
-    case object Replace extends WriteMode  // --replace-tables: DROP + recreate
-  }
-
   def dropTableSql(tableName: String): String = s"DROP TABLE [$tableName]"
-
-  /** Write a table as parquet (the native sink for the graded surface). */
-  def writeParquet(df: DataFrame, path: String, mode: WriteMode): Unit = {
-    val saveMode = mode match {
-      case WriteMode.Append => "append"
-      case _                => "overwrite"
-    }
-    df.write.mode(saveMode).parquet(path)
-  }
 }

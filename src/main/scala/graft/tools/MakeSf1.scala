@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize an sf1-scale dataset (10x sf0.1) for scale validation —
@@ -140,14 +140,8 @@ object MakeSf1 {
       case None => _ => true
     }
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", "32")
 
     def load(t: String) = spark.read.parquet(s"$src/$t.parquet")
     // strides: one per key domain, > max(key) so copies never collide

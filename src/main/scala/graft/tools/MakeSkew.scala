@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthesize a SKEW-TORTURE corpus at sf0.1 cardinality — same row
@@ -66,14 +65,8 @@ object MakeSkew {
     val copies = args.lift(1).map(_.toInt).getOrElse(1)
     require(copies >= 1 && copies <= 100, s"copies in [1,100], got $copies")
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", "32")
 
     def load(t: String) = spark.read.parquet(s"$src/$t.parquet")
 

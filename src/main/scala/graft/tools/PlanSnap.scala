@@ -3,8 +3,6 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: dump `.explain("formatted")` for named graded queries to
   * `plans/<round>/<query>_<tag>.txt` — the before/after evidence files
   * the optimization rounds commit alongside OPTIMIZATION_r*.md.
@@ -22,11 +20,7 @@ object PlanSnap {
     }
     val dir = args.lift(3).getOrElse("/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.build(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val out = Paths.get(s"plans/$round")
     Files.createDirectories(out)

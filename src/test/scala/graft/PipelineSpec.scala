@@ -359,6 +359,21 @@ class PipelineSpec extends SparkSpec {
       Seq("The Rock", "National Treasure", "Troy", "Seven"))
   }
 
+  test("a failed run drops every cache it filled") {
+    val sc = spark.sparkContext
+    val out = outDir()
+    val csv = tempCsv("test.csv", Fixtures.CSV)
+    val before = sc.getPersistentRDDs.keySet.toSet
+    // the -f check runs after every table is written, so the scan,
+    // dictionary and fact caches are all filled when it throws
+    intercept[IllegalArgumentException] {
+      Pipeline.run(spark, cfg(Seq(csv), "failed.db").copy(
+        extractColumns = Seq("office"), ftsColumns = Seq("missing"), outputDir = Some(out)))
+    }
+    assert(Files.exists(java.nio.file.Paths.get(out, "test.parquet")))
+    assert(sc.getPersistentRDDs.keySet.toSet === before)
+  }
+
   test("a lookup table extended from a multi-file parquet state keeps ids ascending per partition") {
     val out = outDir()
     // pre-existing lookup state in two files; the larger (ids 3..30)

@@ -116,6 +116,43 @@ class SqliteCliSpec extends SparkSpec {
       === Seq(Seq(Some("5"))))
   }
 
+  private val MayorCsv =
+    "county,precinct,office,district,party,candidate,votes\nYolo,100002,Mayor,,,Jane Doe,12\n"
+
+  test("real .db: --replace-tables drops and recreates the fact table (K4)") {
+    assume(SqliteCli.binary.isDefined, "no sqlite3 binary on this box")
+    val out = Files.createTempDirectory("graft-realdb-out").toString
+    val f = dbFile()
+    val base = cfg(Seq(tempCsv("test.csv", Fixtures.CSV))).copy(outputDir = Some(out))
+    SqliteCli.writeDb(f, Pipeline.run(spark, base))
+    SqliteCli.writeDb(f, Pipeline.run(spark, base.copy(
+      paths = Seq(tempCsv("test.csv", MayorCsv)), replaceTables = true)))
+    assert(SqliteCli.query(f, "SELECT rowid, office, candidate FROM [test];") ===
+      Seq(Seq(Some("1"), Some("Mayor"), Some("Jane Doe"))))
+  }
+
+  test("real .db: --replace-tables with -c keeps the lookup table's ids and extends it") {
+    assume(SqliteCli.binary.isDefined, "no sqlite3 binary on this box")
+    val out = Files.createTempDirectory("graft-realdb-out").toString
+    val f = dbFile()
+    val base = cfg(Seq(tempCsv("test.csv", Fixtures.CSV))).copy(
+      extractColumns = Seq("office"), outputDir = Some(out))
+    SqliteCli.writeDb(f, Pipeline.run(spark, base))
+    // the reference drops only the loaded fact table (cli.py:248-249);
+    // the lookup table and its shadow FTS stay (utils.py:151-182)
+    SqliteCli.writeDb(f, Pipeline.run(spark, base.copy(
+      paths = Seq(tempCsv("test.csv", MayorCsv)), replaceTables = true)))
+    val offices = SqliteCli.query(f, "SELECT id, value FROM [office] ORDER BY id;")
+      .map(r => (r(0).get, r(1).get))
+    assert(offices === Seq("1" -> "President", "2" -> "Proposition 51",
+      "3" -> "State Assembly", "4" -> "Mayor"))
+    assert(SqliteCli.query(f, "SELECT office, candidate FROM [test];") ===
+      Seq(Seq(Some("4"), Some("Jane Doe"))))
+    assert(SqliteCli.query(f,
+      "SELECT rowid FROM [office_value_fts] WHERE office_value_fts MATCH 'Mayor';")
+      === Seq(Seq(Some("4"))))
+  }
+
   test("real .db: FTS over EXTRACTED columns matches original strings through lookups") {
     assume(SqliteCli.binary.isDefined, "no sqlite3 binary on this box")
     val csv = tempCsv("test.csv", Fixtures.CSV)
